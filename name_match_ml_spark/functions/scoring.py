@@ -34,7 +34,6 @@ from functools import lru_cache
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    DoubleType,
     IntegerType,
     StringType,
     StructField,
@@ -46,7 +45,6 @@ from .similarity import metaphone, partial_ratio, ratio, soundex, token_set_rati
 __all__ = [
     "SCORE_THRESHOLD",
     "TOTAL_MATCHES_TO_DISPLAY",
-    "COMPOSITE_WEIGHTS",
     "compute_match_score",
     "pair_ratios_udf",
     "phonetic_codes_udf",
@@ -57,19 +55,6 @@ NUM_TOP_GROUP_MATCHES = 2
 NUM_ADDITIONAL_POSSIBLE_MATCHES = 2
 TOTAL_MATCHES_TO_DISPLAY = NUM_TOP_GROUP_MATCHES + NUM_ADDITIONAL_POSSIBLE_MATCHES
 SCORE_THRESHOLD = 50
-
-# Weights from ``main.py:76-88``.
-COMPOSITE_WEIGHTS = {
-    "lev_full": 0.2,
-    "partial_full": 0.2,
-    "token_set_full": 0.2,
-    "token_set_last": 0.3,
-    "token_set_first": 0.2,
-    "soundex_last": 6,
-    "metaphone_last": 7,
-    "soundex_first": 3,
-    "metaphone_first": 3,
-}
 
 _USERNAME_SPLIT_RE = re.compile(r"[\._\-\s]")
 
@@ -228,28 +213,4 @@ def phonetic_codes_udf(s: pd.Series) -> pd.DataFrame:
             "sdx": [soundex(v) for v in vals],
             "mp": [metaphone(v) for v in vals],
         }
-    )
-
-
-@pandas_udf(DoubleType())
-def match_score_udf(
-    username: pd.Series,
-    employee_name: pd.Series,
-    first_name: pd.Series,
-    last_name: pd.Series,
-    emp_id: pd.Series,
-) -> pd.Series:
-    """Monolithic scorer UDF — kept only for differential testing of the
-    decomposed native plan; the production pipeline does NOT use it."""
-    return pd.Series(
-        [
-            compute_match_score(u, e, f, l, i)
-            for u, e, f, l, i in zip(
-                username.fillna(""),
-                employee_name.fillna(""),
-                first_name.fillna(""),
-                last_name.fillna(""),
-                emp_id.fillna(""),
-            )
-        ]
     )

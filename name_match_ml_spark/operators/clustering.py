@@ -4,8 +4,7 @@ The cluster-based curation family (SemDeDup cells, cluster-balanced
 sampling, coreset pruning) needs a clustering operator whose assignments
 replay bit-exactly in the DuckDB oracle.  MLlib's float KMeans cannot be
 that operator: float centroid reductions are summation-order dependent,
-so assignments near cell boundaries flip across engines (the reason
-``ivf_cosine_topk`` stayed rows-only since round 3).
+so assignments near cell boundaries flip across engines.
 
 ``grid_kmeans`` is Lloyd's algorithm restated on the int64 grid so every
 step is exact and engine-replayable (VERDICT r6 #5):
@@ -320,10 +319,9 @@ def grid_ivf_topk(
     probe_row_budget: int | None = None,
 ) -> DataFrame:
     """IVF ANN with :func:`grid_kmeans` as the coarse quantizer — the
-    hash-checkable successor to the float-KMeans ``ivf_cosine_topk``
-    (rows-only since round 3 because MLlib centroid reductions aren't
-    bit-stable across engines; every step here is exact int64, so the
-    DuckDB oracle replays the full probe → inverted-list scan → top-k).
+    hash-checkable IVF (MLlib centroid reductions aren't bit-stable
+    across engines; every step here is exact int64, so the DuckDB oracle
+    replays the full probe → inverted-list scan → top-k).
 
     The query set is an EXPLICIT ``queries`` DataFrame (``id_col``,
     ``vec_col`` — quantized with the same per-vector device as the

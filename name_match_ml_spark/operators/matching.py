@@ -22,8 +22,10 @@ Spark-first plan (vs the reference's O(U×E) row-at-a-time Python loop):
 4. **Top-k** — one window (`row_number <= k`) per username partition; in
    Spark ≥3.5 the rank filter is pushed into the shuffle via
    WindowGroupLimit, so each partition keeps ≤ k rows per key.
-5. **Labels + NOT-FOUND** — ``dense_rank`` + a ``when`` chain; usernames
-   with no surviving match re-enter via left-anti join + sentinel union.
+5. **Labels + NOT-FOUND** — ``dense_rank`` + a ``when`` chain; every
+   username text also carries a score −1 dummy candidate, so one with no
+   match ≥ 50 turns its rank-1 row into the sentinel in the same window
+   pass.
 
 Tie handling: the reference's pandas sort is unstable, so top-4 membership
 under ties is unspecified there; this engine defines the deterministic
@@ -32,8 +34,6 @@ tiebreak ``(score DESC, emp_id ASC)`` and documents the divergence
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -44,6 +44,7 @@ from ..functions.scoring import (
     pair_ratios_udf,
     phonetic_codes_udf,
 )
+from ..plans.blocking import blocked_candidates
 from ..plans.staging import stage
 
 __all__ = [
@@ -55,32 +56,6 @@ __all__ = [
 ]
 
 _SPLIT_PATTERN = r"[\._\-\s]"  # main.py:32
-
-# Re-spread blocked candidates before the Arrow scoring stage (see
-# match_usernames); module-level so benchmarks can A/B it.
-_REPARTITION_PAIRS = True
-
-# Checkpoint the per-row prepared sides (u/e).  Kept ON: same-session
-# A/B (optimization round 11, 4 reps alternating) measured unstaging
-# them a clear LOSS (flagship min 8.6 s vs 6.5 s) — each side feeds two
-# consumers (the distinct-text derivation and the final fan-out /
-# employee re-attach joins), and without the cut the scan + normalize +
-# dropDuplicates lineage re-executes per consumer.  Module-level so
-# benchmarks can A/B it.
-_STAGE_SIDES = True
-
-# Checkpoint the DISTINCT-text frames (u_texts/e_texts) in addition to
-# the per-row prepared sides; module-level so benchmarks can A/B it.
-# The distinct frames are consumed 2-3× (blocking key aggregates + the
-# candidate join + the dummy branch), but they are vocabulary-sized
-# (hundreds to low thousands of rows), so re-deriving them per consumer
-# is cheap while each stage() adds a repartition exchange plus a
-# scheduled checkpoint materialization — a net LOSS at bench scale
-# (VERDICT r10 #1: flagship slid 5.8 → 6.8-7.6 s when these two landed;
-# round-11 same-session A/B: OFF 6.49 s vs ON 6.77 s min-of-4, rows
-# identical).  At corpus scale the frames stay vocabulary-bounded while
-# the checkpoint costs scale with cluster round-trips, so OFF holds.
-_STAGE_DISTINCT_TEXTS = False
 
 # blocking=None auto-select: exact cross-scoring is allowed only when the
 # estimated (usernames × roster) pair count stays under this budget AND the
@@ -128,32 +103,6 @@ def _estimated_rows(df: DataFrame) -> float:
         return float("inf") if n > _PROBE_ROW_CAP else float(n)
     except Exception:  # py4j / analysis edge: be safe, block
         return float("inf")
-
-
-_SIZE_SUFFIX = {
-    "": 1, "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-}
-
-
-def _parse_byte_size(s: str | None) -> int | None:
-    """Spark byte-size conf value → bytes, or None when unparseable.
-
-    Spark reports ``spark.sql.autoBroadcastJoinThreshold`` with a size
-    suffix even for the default (``'10485760b'``), and users set values
-    like ``'100MB'`` — a bare ``int()`` raises on every one of those and
-    would silently pin the auto-select to the hard-coded default.
-    """
-    if s is None:
-        return None
-    m = re.fullmatch(r"\s*(-?\d+)\s*([a-zA-Z]*)\s*", s)
-    if not m:
-        return None
-    mult = _SIZE_SUFFIX.get(m.group(2).lower())
-    return None if mult is None else int(m.group(1)) * mult
 
 
 def _norm(c: Column) -> Column:
@@ -307,19 +256,25 @@ def match_usernames(
     usernames: DataFrame,
     employees: DataFrame,
     *,
-    top_k: int = TOTAL_MATCHES_TO_DISPLAY,
-    threshold: float = float(SCORE_THRESHOLD),
-    include_not_found: bool = True,
-    broadcast_employees: bool = True,
     blocking: bool | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
-    """End-to-end flagship pipeline.
+    """End-to-end flagship pipeline: every username's top
+    ``TOTAL_MATCHES_TO_DISPLAY`` matches scoring ≥ ``SCORE_THRESHOLD``,
+    with dense-rank labels, or one ``USER NOT FOUND`` row.
 
     ``usernames`` needs a ``username`` column (plus optional ``input_id``
     carried through); ``employees`` needs the canonical four columns
     (``sources/csv.py``).  Returns one row per surviving match with
     ``username, emp_id, emp_name, score, match_rank, match_type``.
+
+    ``blocking`` picks the candidate path: ``False`` cross-joins the
+    distinct texts against the broadcast roster texts (exact), ``True``
+    uses blocked equi-joins (``plans/blocking.py``), trading bounded
+    recall loss for O(U·B̄) work.  ``None`` (default) auto-selects from
+    Catalyst plan statistics: exact cross-scoring when the estimated pair
+    product is ≤ ``_CROSS_PAIR_BUDGET`` and the roster fits Spark's
+    ``autoBroadcastJoinThreshold``, blocked candidates otherwise — a
+    default caller can never hit an unbounded cross join.
 
     Scale design — the expensive Python scoring runs once per **distinct
     text pair**, never per (username × employee) row:
@@ -327,14 +282,7 @@ def match_usernames(
     1. Both sides are reduced to distinct text rows (``u_norm`` /
        ``(e_name, e_first, e_last)``): real corpora repeat names heavily,
        and the score is a pure function of the normalized texts.
-    2. Candidates come from a cross join of the distinct texts (broadcast
-       when the roster side fits) or via blocked equi-joins
-       (``plans/blocking.py``), trading bounded recall loss for O(U·B̄)
-       work.  ``blocking=None`` (default) auto-selects from Catalyst plan
-       statistics: exact cross-scoring when the estimated pair product is
-       ≤ ``_CROSS_PAIR_BUDGET`` and the roster is broadcastable, blocked
-       candidates otherwise — a default caller can never hit an unbounded
-       cross join.  Pass ``True``/``False`` to force a path.
+    2. Candidates are distinct-text pairs from the path above.
     3. Top-k pruning happens *before* re-expansion: ``rank() <= k`` over
        texts (rank keeps score ties — a text with k rows strictly ahead
        can never reach the final top-k since every text carries ≥1
@@ -344,73 +292,41 @@ def match_usernames(
     4. The per-``u_norm`` result fans back out to the original username
        rows with one narrow join.
     """
-    # The prepared sides each feed 2 consumers (distinct-text derivation
-    # and the final fan-out / employee re-attach join); staging runs the
-    # scan + normalization + split once per side instead of once per
-    # consumer (see plans/staging.py and the _STAGE_* notes above — the
-    # phonetic UDFs attach after the distinct pass and are NOT staged).
+    spark = usernames.sparkSession
     if blocking is None:
-        # Auto-select from plan statistics (no job): exact cross-scoring
-        # only when the pair product is affordable AND the roster side is
-        # broadcastable; default callers on an unbounded roster get the
-        # blocked path instead of an O(U·E) cross join (VERDICT r2 #3).
-        spark = usernames.sparkSession
-        bcast_threshold = _parse_byte_size(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-        )
-        if bcast_threshold is None:
-            bcast_threshold = 10 * 1024 * 1024
+        # Auto-select from plan statistics (no job).  Spark parses its own
+        # byte-size conf ('10485760b', '100MB', '-1'); a threshold <= 0
+        # disables broadcast, so auto falls back to blocking.
+        bcast_threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
         e_rows = _estimated_rows(employees)
         u_rows = _estimated_rows(usernames)
-        # threshold <= 0 disables broadcast → auto falls back to blocking
         e_broadcastable = e_rows * _EST_BYTES_PER_ROW <= max(bcast_threshold, 0)
         blocking = not (e_broadcastable and u_rows * e_rows <= _CROSS_PAIR_BUDGET)
 
-    # Phonetic codes attach AFTER the distinct pass (optimization round
-    # 10, guide §4 — same rationale as scoring once per distinct pair):
-    # the per-row staged sides carry only native normalizations, and the
-    # Arrow phonetic UDF runs once per DISTINCT text (sf0.1: 400 rows
-    # instead of 30k UDF calls on the roster side, 1.7k instead of 15k
-    # on the username side).  The codes are pure functions of the
-    # normalized names, so every scored value is identical.
-    u = stage(
-        prepare_usernames(usernames, codes=False),
-        "u_norm",
-        enabled=materialize and _STAGE_SIDES,
-    )
-    e = stage(
-        prepare_employees(employees, codes=False),
-        "e_name",
-        enabled=materialize and _STAGE_SIDES,
-    )
+    # Each prepared side feeds two consumers (the distinct-text derivation
+    # and the final fan-out / employee re-attach join), so it is staged:
+    # unstaged, the scan + normalization + split re-ran per consumer
+    # (flagship 8.6 s vs 6.5 s staged).  Phonetic codes attach after the
+    # distinct pass, so the Arrow phonetic UDF runs once per DISTINCT text;
+    # the codes are pure functions of the normalized names.
+    u = stage(prepare_usernames(usernames, codes=False), "u_norm")
+    e = stage(prepare_employees(employees, codes=False), "e_name")
 
-    u_texts = stage(
-        _attach_username_codes(
-            u.select("u_norm", "u_part1", "u_part2").dropDuplicates(["u_norm"])
-        ),
-        "u_norm",
-        enabled=materialize and _STAGE_DISTINCT_TEXTS,
+    # The distinct-text frames are sized by the vocabulary, not the rows:
+    # re-deriving them per consumer is cheaper than a checkpoint.
+    u_texts = _attach_username_codes(
+        u.select("u_norm", "u_part1", "u_part2").dropDuplicates(["u_norm"])
     )
-    e_texts = stage(
-        _attach_employee_codes(e.select(*_E_TEXT).dropDuplicates(_E_TEXT)),
-        "e_name",
-        enabled=materialize and _STAGE_DISTINCT_TEXTS,
-    )
+    e_texts = _attach_employee_codes(e.select(*_E_TEXT).dropDuplicates(_E_TEXT))
 
     if blocking:
-        from ..plans.blocking import blocked_candidates
-
-        pairs = blocked_candidates(u_texts, e_texts, broadcast_employees=broadcast_employees)
-        if _REPARTITION_PAIRS:
-            # The scoring stage's cost is per-ROW Python (Arrow UDF), not
-            # per-byte, but AQE coalesces the candidate dedup's output by
-            # bytes — a few MB of candidate pairs collapse to ~1 partition
-            # and the UDF serializes.  Re-spread explicitly; the narrow
-            # text pairs make this exchange trivial next to the scoring
-            # it parallelizes.
-            pairs = pairs.repartition(usernames.sparkSession.sparkContext.defaultParallelism)
+        pairs = blocked_candidates(u_texts, e_texts, broadcast_employees=True)
+        # The scoring stage's cost is per-ROW Python (Arrow UDF), but AQE
+        # coalesces the candidate pairs by bytes — a few MB collapse to ~1
+        # partition and the UDF serializes.  Re-spread them.
+        pairs = pairs.repartition(spark.sparkContext.defaultParallelism)
     else:
-        pairs = u_texts.crossJoin(F.broadcast(e_texts) if broadcast_employees else e_texts)
+        pairs = u_texts.crossJoin(F.broadcast(e_texts))
 
     scored = score_candidates(pairs).select("u_norm", *_E_TEXT, "score")
 
@@ -419,7 +335,9 @@ def match_usernames(
     # emp_id tiebreak survives pruning.
     w_text = Window.partitionBy("u_norm").orderBy(F.col("score").desc())
     top_texts = (
-        scored.withColumn("_tr", F.rank().over(w_text)).filter(F.col("_tr") <= top_k).drop("_tr")
+        scored.withColumn("_tr", F.rank().over(w_text))
+        .filter(F.col("_tr") <= TOTAL_MATCHES_TO_DISPLAY)
+        .drop("_tr")
     )
 
     # Within one employee text all employees score equally, so only the k
@@ -428,7 +346,7 @@ def match_usernames(
     w_emp = Window.partitionBy(*_E_TEXT).orderBy(F.col("emp_id").asc())
     e_short = (
         e.withColumn("_er", F.row_number().over(w_emp))
-        .filter(F.col("_er") <= top_k)
+        .filter(F.col("_er") <= TOTAL_MATCHES_TO_DISPLAY)
         .select(*_E_TEXT, "emp_id", "employee_name")
     )
 
@@ -436,19 +354,18 @@ def match_usernames(
         "u_norm", "emp_id", F.col("employee_name").alias("emp_name"), "score"
     )
 
-    if include_not_found:
-        # One dummy candidate per distinct username text (score -1, sorts
-        # last).  It wins rank 1 only when a username has no real candidate
-        # at all (possible under blocking), which funnels every username
-        # through the single window pass below — no anti-join, no second
-        # evaluation of the scored lineage (main.py:172-179 semantics).
-        dummy = u_texts.select(
-            "u_norm",
-            F.lit("").alias("emp_id"),
-            F.lit("").alias("emp_name"),
-            F.lit(-1.0).alias("score"),
-        )
-        slim = slim.unionByName(dummy)
+    # One dummy candidate per distinct username text (score -1, sorts
+    # last).  It wins rank 1 only when a username has no real candidate
+    # at all (possible under blocking), which funnels every username
+    # through the single window pass below — no anti-join, no second
+    # evaluation of the scored lineage (main.py:172-179 semantics).
+    dummy = u_texts.select(
+        "u_norm",
+        F.lit("").alias("emp_id"),
+        F.lit("").alias("emp_name"),
+        F.lit(-1.0).alias("score"),
+    )
+    slim = slim.unionByName(dummy)
 
     key = ["input_id", "username"] if "input_id" in u.columns else ["username"]
     w_top = Window.partitionBy("u_norm").orderBy(F.col("score").desc(), F.col("emp_id").asc())
@@ -457,7 +374,7 @@ def match_usernames(
 
     top = (
         slim.withColumn("_rn", F.row_number().over(w_top))
-        .filter(F.col("_rn") <= top_k)  # main.py:169 head(k)
+        .filter(F.col("_rn") <= TOTAL_MATCHES_TO_DISPLAY)  # main.py:169 head(k)
         .withColumn("_dr", F.dense_rank().over(w_rank))
         .withColumn("_max_score", F.max("score").over(w_all))
     )
@@ -470,38 +387,24 @@ def match_usernames(
         .otherwise("")
     )  # main.py:181-186; ties share a label via dense_rank (main.py:188-198)
 
-    if not include_not_found:
-        per_text = top.filter(F.col("score") >= threshold).select(  # main.py:170
-            "u_norm",
-            "emp_id",
-            "emp_name",
-            "score",
-            F.col("_dr").alias("match_rank"),
-            labels.alias("match_type"),
-        )
-    else:
-        # A username "has matches" iff its best (non-dummy) score clears
-        # the threshold; otherwise its rank-1 row morphs into the
-        # NOT-FOUND sentinel (main.py:172-179).  Dense ranks are
-        # unaffected by dropping the sub-threshold tail, since that tail
-        # always ranks below the kept rows.
-        is_not_found = F.col("_max_score") < threshold
-        per_text = top.filter(
-            (F.col("score") >= threshold) | (is_not_found & (F.col("_rn") == 1))
-        ).select(
-            "u_norm",
-            F.when(is_not_found, F.lit("N/A")).otherwise(F.col("emp_id")).alias("emp_id"),
-            F.when(is_not_found, F.lit("USER NOT FOUND"))
-            .otherwise(F.col("emp_name"))
-            .alias("emp_name"),
-            F.when(is_not_found, F.lit(0.0)).otherwise(F.col("score")).alias("score"),
-            F.when(is_not_found, F.lit(None).cast("int"))
-            .otherwise(F.col("_dr"))
-            .alias("match_rank"),
-            F.when(is_not_found, F.lit("USER NOT FOUND"))
-            .otherwise(labels)
-            .alias("match_type"),
-        )
+    # A username "has matches" iff its best (non-dummy) score clears the
+    # threshold (main.py:170); otherwise its rank-1 row morphs into the
+    # NOT-FOUND sentinel (main.py:172-179).  Dense ranks are unaffected by
+    # dropping the sub-threshold tail, since that tail always ranks below
+    # the kept rows.
+    is_not_found = F.col("_max_score") < SCORE_THRESHOLD
+    per_text = top.filter(
+        (F.col("score") >= SCORE_THRESHOLD) | (is_not_found & (F.col("_rn") == 1))
+    ).select(
+        "u_norm",
+        F.when(is_not_found, F.lit("N/A")).otherwise(F.col("emp_id")).alias("emp_id"),
+        F.when(is_not_found, F.lit("USER NOT FOUND"))
+        .otherwise(F.col("emp_name"))
+        .alias("emp_name"),
+        F.when(is_not_found, F.lit(0.0)).otherwise(F.col("score")).alias("score"),
+        F.when(is_not_found, F.lit(None).cast("int")).otherwise(F.col("_dr")).alias("match_rank"),
+        F.when(is_not_found, F.lit("USER NOT FOUND")).otherwise(labels).alias("match_type"),
+    )
 
     # Fan the per-distinct-text result back out to every original username
     # row (≤ k rows per u_norm on the right side; AQE broadcasts when

@@ -1757,11 +1757,10 @@ def q_grid_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over the grid_kmeans coarse quantizer
     (operators/clustering.py::grid_ivf_topk): probe the 4 nearest of 10
     cells per query, exact int64 scoring within probed inverted lists,
-    top-5 — the hash-checkable IVF representative that the float-KMeans
-    ivf_cosine_topk could not be (rows-only since round 3; retired from
-    the declared surface in round 10 — it survives as a pytest-gated
-    API, recall >= 0.5 vs exact, tests/test_dedup_simsearch.py).
-    Recall vs the same-grid brute force is pinned >= 0.55 in pytest."""
+    top-5 — the hash-checkable IVF representative (a float-KMeans IVF
+    cannot be hash-checked: centroid reductions are summation-order
+    dependent).  Recall vs the same-grid brute force is pinned >= 0.55
+    in pytest."""
     from .operators.clustering import grid_ivf_topk
 
     return grid_ivf_topk(
@@ -8787,7 +8786,6 @@ def flagship_corpus_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         _corpus_usernames(spark, sf_dir),
         _corpus_roster(spark, sf_dir),
         blocking=True,
-        broadcast_employees=True,
     )
 
 # Bloom decontamination: the oracle rebuilds the SAME 65536-bit filter

@@ -98,17 +98,6 @@ def test_cosine_topk_exact_enforces_query_cap(spark):
         cosine_topk_exact(emb, emb, k=3, max_queries=10)
 
 
-def test_ivf_cosine_topk_enforces_query_cap(spark):
-    """VERDICT r8 #1: the legacy IVF path builds a driver-side inverted
-    file, so its query collect must be LIMIT-bounded and raise on an
-    oversized set instead of OOMing."""
-    from name_match_ml_spark.operators.simsearch import ivf_cosine_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    with pytest.raises(ValueError, match="max_queries"):
-        ivf_cosine_topk(emb, emb, k=3, max_queries=10)
-
-
 def test_quantized_cosine_topk_enforces_query_cap(spark):
     from name_match_ml_spark.operators.simsearch import quantized_cosine_topk
 

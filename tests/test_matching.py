@@ -2,12 +2,13 @@
 
 The oracle is ``compute_match_score`` + an exact reimplementation of the
 reference's top-k/threshold/label loop (``main.py:163-209``), run over the
-reference's own fixtures (read-only at /root/reference).
+in-repo roster and username fixtures (``tests/fixtures/README.md``).
 """
 
 from __future__ import annotations
 
 import csv
+from pathlib import Path
 
 import pytest
 
@@ -25,8 +26,9 @@ from name_match_ml_spark.operators.matching import (
 )
 from name_match_ml_spark.sources.csv import employees_from_df, load_employees, load_usernames
 
-REF_EMPLOYEES = "/root/reference/employee.csv"
-REF_USERNAMES = "/root/reference/usernames.csv"
+FIXTURES = Path(__file__).parent / "fixtures"
+REF_EMPLOYEES = str(FIXTURES / "employee.csv")
+REF_USERNAMES = str(FIXTURES / "usernames.csv")
 
 
 def _ref_rows():
@@ -75,7 +77,7 @@ def test_employee_ingestion_canonicalizes(ref_dfs):
     employees, _ = ref_dfs
     assert employees.columns == ["emp_id", "first_name", "last_name", "employee_name"]
     rows = employees.collect()
-    assert len(rows) == 154  # 155 lines incl. header, no trailing newline
+    assert len(rows) == 110
     by_id = {r.emp_id: r for r in rows}
     assert by_id["7"].employee_name == "Swati Patel"
     assert by_id["7"].first_name == "Swati"
@@ -140,10 +142,8 @@ def test_flagship_matches_oracle(spark, ref_dfs):
 
 
 def test_golden_output_rows(spark, ref_dfs):
-    """assets/example.png rows through the full distributed pipeline.
-
-    (The pictured usernames are not in usernames.csv — the screenshot was
-    made from a different upload — so feed them directly.)"""
+    """assets/example.png rows through the full distributed pipeline,
+    fed as their own upload as in the screenshot."""
     employees, _ = ref_dfs
     usernames = spark.createDataFrame(
         [("swati.patel",), ("harshm37",), ("n.tripathi25",)], ["username"]
@@ -166,13 +166,11 @@ def test_golden_output_rows(spark, ref_dfs):
 
 def test_blocked_candidates_recall_on_matches(spark, ref_dfs):
     """Blocking must retain every pair the cross product scores ≥ threshold
-    on the reference fixtures (the blocking keys subsume the scorer's own
-    signals for real name-shaped usernames)."""
+    on the fixtures (the blocking keys subsume the scorer's own signals for
+    real name-shaped usernames)."""
     employees, usernames = ref_dfs
-    full = match_usernames(usernames, employees, include_not_found=False, blocking=False)
-    blocked = match_usernames(
-        usernames, employees, include_not_found=False, blocking=True
-    )
+    full = _found(match_usernames(usernames, employees, blocking=False))
+    blocked = _found(match_usernames(usernames, employees, blocking=True))
     full_pairs = {(r.username, r.emp_id, r.score) for r in full.collect()}
     blocked_pairs = {(r.username, r.emp_id, r.score) for r in blocked.collect()}
     missing = {p for p in full_pairs if p[2] >= 65.0} - blocked_pairs
@@ -198,6 +196,11 @@ def test_score_candidates_matches_python_scorer(spark, ref_dfs):
         assert r.score == pytest.approx(want, abs=1e-9), (r.username, r.emp_id)
 
 
+def _found(matches):
+    """Drop the NOT-FOUND sentinels: the matches that clear the threshold."""
+    return matches.filter(matches.match_type != "USER NOT FOUND")
+
+
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -211,12 +214,10 @@ def test_blocking_auto_select(spark, ref_dfs):
 
     employees, usernames = ref_dfs
 
-    # ~150 employees × ~400 usernames ≈ 60k pairs → exact cross, with the
-    # roster broadcast (bounded build side — allowed here, rejected by the
+    # ~110 employees × ~40 usernames → exact cross, with the roster
+    # broadcast (bounded build side — allowed here, rejected by the
     # guardrail test only for unbounded declared plans).
-    small_plan = _executed_plan(
-        match_usernames(usernames, employees, include_not_found=False)
-    )
+    small_plan = _executed_plan(match_usernames(usernames, employees))
     assert "BroadcastNestedLoopJoin" in small_plan
     assert "_bkey" not in small_plan
 
@@ -235,9 +236,7 @@ def test_blocking_auto_select(spark, ref_dfs):
         F.concat(F.lit("fn"), F.col("id") % 997, F.lit("."), F.lit("ln"), F.col("id") % 991)
         .alias("username")
     )
-    big_plan = _executed_plan(
-        match_usernames(big_usr, big_emp, include_not_found=False)
-    )
+    big_plan = _executed_plan(match_usernames(big_usr, big_emp))
     assert "_bkey" in big_plan
     assert "BroadcastNestedLoopJoin" not in big_plan
     assert "CartesianProduct" not in big_plan
@@ -305,18 +304,22 @@ def test_hot_key_cap_bounds_skewed_blocking(spark):
     assert (f"{fn7}.patel", f"{fn7} patel") in survivors
 
 
-def test_parse_byte_size_spark_conf_values():
-    """Spark reports size confs with suffixes even for defaults
-    ('10485760b'); a bare int() would reject every one of them and pin
-    the auto-select to the hard-coded fallback (ADVICE r3)."""
-    from name_match_ml_spark.operators.matching import _parse_byte_size
+def test_blocking_auto_select_reads_spark_threshold(spark, ref_dfs):
+    """Auto-select reads the broadcast threshold in bytes from Spark's own
+    conf: at reference scale a suffixed size ('100MB') keeps the exact
+    broadcast-cross path, and '-1' (broadcast disabled) forces blocking."""
+    employees, usernames = ref_dfs
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "100MB")
+        plan = _executed_plan(match_usernames(usernames, employees))
+        assert "BroadcastNestedLoopJoin" in plan
+        assert "_bkey" not in plan
 
-    assert _parse_byte_size("10485760") == 10485760
-    assert _parse_byte_size("10485760b") == 10485760
-    assert _parse_byte_size("100MB") == 100 << 20
-    assert _parse_byte_size("1g") == 1 << 30
-    assert _parse_byte_size(" 512 kb ") == 512 << 10
-    assert _parse_byte_size("-1") == -1  # broadcast disabled
-    assert _parse_byte_size(None) is None
-    assert _parse_byte_size("not-a-size") is None
-    assert _parse_byte_size("10x") is None
+        spark.conf.set(key, "-1")
+        plan = _executed_plan(match_usernames(usernames, employees))
+        assert "_bkey" in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+    finally:
+        spark.conf.set(key, saved)

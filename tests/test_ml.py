@@ -3,6 +3,8 @@ vs the reference's ~90% filename baseline, model persistence."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.ml import PipelineModel
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
@@ -25,6 +27,9 @@ from name_match_ml_spark.ml.pipeline import (
 )
 
 TRAIN_4K = "/root/reference/TRAINING_DATA/training_data_(4k).csv"
+# 120 labelled pairs in the same shape (tests/fixtures/README.md), for the
+# tests whose assertions do not depend on the 4k set's contents.
+SMALL_PAIRS = str(Path(__file__).parent / "fixtures" / "training_pairs.csv")
 
 PAIRS_SCHEMA = StructType(
     [
@@ -41,8 +46,13 @@ def train_pairs(spark):
     return spark.read.option("header", True).schema(PAIRS_SCHEMA).csv(TRAIN_4K)
 
 
-def test_pair_features_match_python(spark, train_pairs):
-    sample = train_pairs.limit(40)
+@pytest.fixture(scope="module")
+def small_pairs(spark):
+    return spark.read.option("header", True).schema(PAIRS_SCHEMA).csv(SMALL_PAIRS)
+
+
+def test_pair_features_match_python(spark, small_pairs):
+    sample = small_pairs.limit(40)
     rows = pair_features(sample).collect()
     assert rows
     for r in rows:
@@ -70,14 +80,14 @@ def test_train_accuracy_parity(spark, train_pairs):
         assert report[cls].support > 0
 
 
-def test_model_save_load_roundtrip(spark, train_pairs, tmp_path):
+def test_model_save_load_roundtrip(spark, small_pairs, tmp_path):
     model, predictions = train_match_classifier(
-        train_pairs.limit(600), num_trees=10
+        small_pairs.limit(600), num_trees=10
     )
     path = str(tmp_path / "rf_model")
     model.write().overwrite().save(path)
     loaded = PipelineModel.load(path)
-    featured = pair_features(train_pairs.limit(50)).withColumn(
+    featured = pair_features(small_pairs.limit(50)).withColumn(
         "label", F.col("label").cast("double")
     )
     a = model.transform(featured).select("id", "prediction").collect()

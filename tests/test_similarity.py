@@ -8,6 +8,7 @@ output (``assets/example.png``, rows tabulated in ``FIXTURES.md §E``).
 from __future__ import annotations
 
 import csv
+from pathlib import Path
 
 import pytest
 from hypothesis import given, settings
@@ -23,8 +24,7 @@ from name_match_ml_spark.functions.similarity import (
     token_set_ratio,
 )
 
-REF_EMPLOYEES = "/root/reference/employee.csv"
-REF_USERNAMES = "/root/reference/usernames.csv"
+REF_EMPLOYEES = Path(__file__).parent / "fixtures" / "employee.csv"
 
 
 # -- ratio -----------------------------------------------------------------

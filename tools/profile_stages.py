@@ -70,13 +70,14 @@ def main() -> int:
         # after the action returns, and a status=complete filter would
         # miss them — charging warmup stages to the measured run
         # (ADVICE r10).  Poll unfiltered until the max stageId settles,
-        # then exclude EVERYTHING at or below it.
+        # then exclude EVERYTHING at or below it.  An empty listing
+        # (queue not yet drained) never counts as settled.
         max_seen = -1
         for _ in range(20):
             with urllib.request.urlopen(f"{base}/stages") as r:
                 ids = [s["stageId"] for s in json.load(r)]
             m = max(ids) if ids else -1
-            if m == max_seen:
+            if m >= 0 and m == max_seen:
                 break
             max_seen = m
             time.sleep(0.25)
