@@ -14,22 +14,23 @@ Spark decomposition (see ``operators/matching.py`` for assembly):
 * Phonetic codes (soundex/metaphone) are computed **per side before the
   join** via :func:`phonetic_codes_udf` — O(U+E) Python work instead of
   O(U×E); equality happens natively post-join.
-* Only the five per-pair ratio components require per-pair Python work:
+* Only the five per-pair ratio components require per-pair work:
   :func:`pair_ratios_udf`, one Arrow-vectorised pandas UDF returning a
-  struct.
+  struct, which scores each Arrow batch with the numpy batch kernels of
+  ``functions/similarity.py`` (one uint64 LCS lane per pair).
 
 The pure-Python :func:`compute_match_score` mirrors the reference
 row-function exactly (including the dead ``number_match_bonus`` at
-``main.py:54``) and is the test oracle for the distributed pipeline; the
-only intentional divergences are the guarded edges where the reference
-raises IndexError (``main.py:69`` empty username, ``main.py:73`` trailing
-dot) — this engine scores them instead of crashing.
+``main.py:54``) with the scalar kernels, and is the test oracle for the
+distributed pipeline; the only intentional divergences are the guarded
+edges where the reference raises IndexError (``main.py:69`` empty
+username, ``main.py:73`` trailing dot) — this engine scores them instead
+of crashing.
 """
 
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -40,7 +41,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .similarity import metaphone, partial_ratio, ratio, soundex, token_set_ratio
+from .similarity import (
+    metaphone,
+    partial_ratio,
+    partial_ratio_batch,
+    ratio,
+    ratio_batch,
+    soundex,
+    token_set_ratio,
+    token_set_ratio_batch,
+)
 
 __all__ = [
     "SCORE_THRESHOLD",
@@ -154,21 +164,6 @@ PAIR_RATIOS_SCHEMA = StructType(
 )
 
 
-@lru_cache(maxsize=1 << 20)
-def _pair_components(u: str, e: str, f: str, l: str) -> tuple[int, int, int, int, int]:
-    """Memoized per-pair ratio bundle — real rosters repeat names (many
-    employees share a first or last name), and blocked candidate
-    generation re-presents the same (username, name) text pair across
-    blocks, so the hit rate in the hot path is substantial."""
-    return (
-        ratio(u, e),
-        partial_ratio(u, e),
-        token_set_ratio(u, e),
-        token_set_ratio(u, f),
-        token_set_ratio(u, l),
-    )
-
-
 @pandas_udf(PAIR_RATIOS_SCHEMA)
 def pair_ratios_udf(
     username: pd.Series,
@@ -177,20 +172,21 @@ def pair_ratios_udf(
     last_name: pd.Series,
 ) -> pd.DataFrame:
     """Per-pair ratio components (``main.py:56-61``), one Arrow batch at a
-    time.  Inputs are pre-lowercased/trimmed columns; this is the only
-    per-pair Python stage in the flagship plan."""
-    rows = [
-        _pair_components(u, e, f, l)
-        for u, e, f, l in zip(
-            username.fillna(""),
-            employee_name.fillna(""),
-            first_name.fillna(""),
-            last_name.fillna(""),
-        )
-    ]
+    time through the batch kernels.  Inputs are pre-lowercased/trimmed
+    columns; this is the only per-pair Python stage in the flagship plan.
+    The three token-set ratios share one kernel call, so each distinct
+    string is tokenised once per batch."""
+    u, e, f, l = (s.fillna("").tolist() for s in (username, employee_name, first_name, last_name))
+    n = len(u)
+    token_set = token_set_ratio_batch(u * 3, e + f + l)
     return pd.DataFrame(
-        rows,
-        columns=["lev_full", "partial_full", "token_set_full", "token_set_first", "token_set_last"],
+        {
+            "lev_full": ratio_batch(u, e),
+            "partial_full": partial_ratio_batch(u, e),
+            "token_set_full": token_set[:n],
+            "token_set_first": token_set[n : 2 * n],
+            "token_set_last": token_set[2 * n :],
+        }
     )
 
 

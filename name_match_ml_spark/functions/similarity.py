@@ -16,10 +16,17 @@ re-implemented here from their published semantics:
 * ``soundex``          — jellyfish American Soundex (4-char code).
 * ``metaphone``        — jellyfish Metaphone (Lawrence Philips' 1990 rules).
 
-These run inside Arrow-vectorised pandas UDFs (see ``functions/scoring.py``)
-— never as row-at-a-time Python UDFs — and are unit-tested against golden
-rows from the reference's ``assets/example.png`` (see
-``tests/test_similarity.py``).
+Each ratio comes twice.  The scalar kernels (``ratio``, ``partial_ratio``,
+``token_set_ratio``) score one pair with Python big-int bit-parallel LCS;
+they are the parity oracle (``compute_match_score``, the tests, the
+benchmark's per-kernel timings) and are unit-tested against golden rows
+from the reference's ``assets/example.png`` (``tests/test_similarity.py``).
+The batch kernels (``ratio_batch``, ``partial_ratio_batch``,
+``token_set_ratio_batch``) score a whole Arrow batch at once, one numpy
+``uint64`` lane per (needle, haystack) pair, and are bit-identical to the
+scalar ones; they are what the pandas UDFs run (``functions/scoring.py``,
+``ml/pipeline.py``).  Needles over 63 characters fall back to the scalar
+kernels.
 
 All functions are total: they return defined values for empty strings and
 strings with digits/punctuation, where the reference can crash
@@ -29,11 +36,17 @@ strings with digits/punctuation, where the reference can crash
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
+
+import numpy as np
 
 __all__ = [
     "ratio",
     "partial_ratio",
     "token_set_ratio",
+    "ratio_batch",
+    "partial_ratio_batch",
+    "token_set_ratio_batch",
     "soundex",
     "metaphone",
     "full_process",
@@ -183,6 +196,214 @@ def token_set_ratio(s1: str, s2: str) -> int:
         ratio(sorted_sect, combined_2to1),
         ratio(combined_1to2, combined_2to1),
     )
+
+
+# --------------------------------------------------------------------------
+# Batch kernels: the same ratios over a whole Arrow batch in numpy lanes
+# --------------------------------------------------------------------------
+
+# A lane's register holds the needle's bits plus the carry out of the top
+# one, so needles of up to 63 characters fit a uint64; longer needles fall
+# back to the scalar kernels above.
+MAX_LANE_NEEDLE = 63
+# Pairs × haystack positions per chunk: bounds the (pairs, haystack, needle)
+# equality tensor at 64 bytes a cell, about 8 MB, whatever the batch size.
+_CHUNK_CELLS = 1 << 17
+# Padding code points, outside Unicode and different on the two sides, so a
+# padded position never matches anything.
+_NEEDLE_PAD = np.uint32(0xFFFFFFFF)
+_HAYSTACK_PAD = np.uint32(0xFFFFFFFE)
+
+
+def _objects(strs: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
+    """``strs`` as an object array of str, and their lengths."""
+    arr = np.empty(len(strs), dtype=object)
+    arr[:] = list(map(str, strs))
+    return arr, np.fromiter(map(len, arr), dtype=np.int64, count=len(arr))
+
+
+def _codes(strs: np.ndarray, lens: np.ndarray, pad: np.uint32) -> np.ndarray:
+    """``(len(strs), longest)`` uint32 code points, right-padded with ``pad``."""
+    width = max(int(lens.max(initial=0)), 1)
+    codes = np.array(strs, dtype=f"<U{width}").view(np.uint32).reshape(len(strs), width)
+    return np.where(np.arange(width) < lens[:, None], codes, pad)
+
+
+def _match_masks_batch(needles, needle_len, haystacks, hay_len) -> np.ndarray:
+    """``(pairs, longest haystack)`` uint64: bit i of ``[p, j]`` is set ⇔
+    ``needles[p][i] == haystacks[p][j]`` — the per-character masks of
+    :func:`_match_masks`, packed once for the whole chunk."""
+    nc = _codes(needles, needle_len, _NEEDLE_PAD)
+    hc = _codes(haystacks, hay_len, _HAYSTACK_PAD)
+    packed = np.packbits(hc[:, :, None] == nc[:, None, :], axis=2, bitorder="little")
+    lanes = np.zeros(packed.shape[:2] + (8,), np.uint8)
+    lanes[:, :, : packed.shape[2]] = packed
+    return lanes.view("<u8")[:, :, 0]
+
+
+def _lcs_steps(masks: np.ndarray, starts: np.ndarray, m: np.ndarray, steps: int):
+    """The Allison–Dix update of :func:`_lcs_len`, one uint64 lane per
+    (needle, haystack) pair: lane k reads ``masks[starts[k] + j]`` at step j
+    and has needle length ``m[k]`` (1..63).  Yields the lanes' LCS after
+    every step.
+
+    ``v + (v & mask)`` is below ``2**(m+1)``, and it carries out of bit m
+    exactly when the LCS grows, so ``(v + u) >> m`` is the increment and no
+    popcount is needed.  A zero mask (padding) leaves a lane unchanged."""
+    full = (np.uint64(1) << m) - np.uint64(1)
+    v = full.copy()
+    lcs = np.zeros(len(m), np.uint64)
+    for j in range(steps):
+        mask = masks.take(starts + j)
+        u = v & mask
+        s = v + u
+        lcs += s >> m
+        v = (s | (v ^ u)) & full
+        yield lcs
+
+
+def _chunks(hay_len: np.ndarray):
+    """Index arrays over the pairs, shortest haystack first, each chunk
+    holding at most ``_CHUNK_CELLS`` pairs × longest haystack (or one
+    pair)."""
+    order = np.argsort(hay_len, kind="stable")
+    sorted_len = np.maximum(hay_len[order], 1)
+    i, n = 0, len(order)
+    while i < n:
+        cost = np.arange(1, n - i + 1) * sorted_len[i:]
+        end = i + max(1, int(np.searchsorted(cost, _CHUNK_CELLS, side="right")))
+        yield order[i:end]
+        i = end
+
+
+def _lcs_batch(needles, needle_len, haystacks, hay_len) -> np.ndarray:
+    """LCS length of every pair; each needle has 1..``MAX_LANE_NEEDLE``
+    characters."""
+    out = np.zeros(len(needles), np.int64)
+    for idx in _chunks(hay_len):
+        masks = _match_masks_batch(needles[idx], needle_len[idx], haystacks[idx], hay_len[idx])
+        width = masks.shape[1]
+        m = needle_len[idx].astype(np.uint64)
+        for lcs in _lcs_steps(masks.ravel(), np.arange(len(idx)) * width, m, width):
+            pass
+        out[idx] = lcs
+    return out
+
+
+def _oriented(s1: Sequence[str], s2: Sequence[str]):
+    """Both sides as object arrays, then each pair as (needle = the shorter
+    side, haystack) with their lengths, and the pairs whose needle fits a
+    lane (1..``MAX_LANE_NEEDLE`` characters)."""
+    a, la = _objects(s1)
+    b, lb = _objects(s2)
+    swap = la > lb
+    needle, haystack = np.where(swap, b, a), np.where(swap, a, b)
+    m, n = np.minimum(la, lb), np.maximum(la, lb)
+    lanes = np.flatnonzero((m > 0) & (m <= MAX_LANE_NEEDLE))
+    return a, b, needle, m, haystack, n, lanes
+
+
+def ratio_batch(s1: Sequence[str], s2: Sequence[str]) -> np.ndarray:
+    """:func:`ratio` of every pair ``(s1[k], s2[k])``, bit-identical to it."""
+    a, b, needle, m, haystack, n, k = _oriented(s1, s2)
+    lensum = m + n
+    out = np.where(lensum == 0, 100, 0)
+    lcs = _lcs_batch(needle[k], m[k], haystack[k], n[k])
+    out[k] = np.rint(100 * ((2.0 * lcs) / lensum[k]))
+    for j in np.flatnonzero(m > MAX_LANE_NEEDLE):
+        out[j] = ratio(a[j], b[j])
+    return out
+
+
+def _partial_ratio_lanes(needles, needle_len, haystacks, hay_len) -> np.ndarray:
+    """:func:`_partial_ratio_float` of every pair, one lane per (pair, start
+    offset).  Only starts whose character occurs in the needle get a lane:
+    a window that begins on an unmatched character has the LCS of the window
+    one shorter, so it never wins."""
+    best = np.zeros(len(needles))
+    for idx in _chunks(hay_len):
+        masks = _match_masks_batch(needles[idx], needle_len[idx], haystacks[idx], hay_len[idx])
+        pair, start = np.nonzero(masks)
+        width = masks.shape[1]
+        # Zero columns after each haystack: a lane that has read its whole
+        # window reads only zero masks from then on.
+        padded = np.concatenate([masks, np.zeros_like(masks)], axis=1).ravel()
+        m = needle_len[idx].astype(np.uint64)[pair]
+        m_f = m.astype(np.float64)
+        lane_best = np.zeros(len(pair))
+        lanes = _lcs_steps(padded, pair * (2 * width) + start, m, width)
+        for w, lcs in enumerate(lanes, start=1):
+            np.maximum(lane_best, (2.0 * lcs) / (m_f + w), out=lane_best)
+        pair_best = np.zeros(len(idx))
+        np.maximum.at(pair_best, pair, lane_best)
+        best[idx] = pair_best
+    return best
+
+
+def partial_ratio_batch(s1: Sequence[str], s2: Sequence[str]) -> np.ndarray:
+    """:func:`partial_ratio` of every pair ``(s1[k], s2[k])``, bit-identical
+    to it.  Equal-length pairs get lanes in both directions, which is the
+    scalar kernel's second pass (it only ever raises the best)."""
+    a, b, needle, m, haystack, n, k = _oriented(s1, s2)
+    out = np.where(m + n == 0, 100, 0)
+    both = k[m[k] == n[k]]
+    owner = np.concatenate([k, both])
+    best = np.zeros(len(a))
+    np.maximum.at(
+        best,
+        owner,
+        _partial_ratio_lanes(
+            np.concatenate([needle[k], haystack[both]]),
+            m[owner],
+            np.concatenate([haystack[k], needle[both]]),
+            n[owner],
+        ),
+    )
+    out[k] = np.rint(100 * best[k])
+    for j in np.flatnonzero(m > MAX_LANE_NEEDLE):
+        out[j] = partial_ratio(a[j], b[j])
+    return out
+
+
+def token_set_ratio_batch(s1: Sequence[str], s2: Sequence[str]) -> np.ndarray:
+    """:func:`token_set_ratio` of every pair ``(s1[k], s2[k])``,
+    bit-identical to it.  Each distinct string is tokenised once.  Per
+    distinct pair: either side without tokens scores 0, and one token set
+    inside the other 100 (its intersection string equals one combined
+    string); disjoint sets leave only the ratio of the two sorted token
+    strings; otherwise the three operand pairs of :func:`token_set_ratio`
+    go through one :func:`ratio_batch` pass with all the others."""
+    tokens: dict[str, frozenset[str]] = {}
+    for s in (*s1, *s2):
+        if s not in tokens:
+            tokens[s] = frozenset(full_process(s).split())
+    joined = {s: " ".join(sorted(t)) for s, t in tokens.items()}
+    index: dict[tuple[str, str], int] = {}
+    keys = np.fromiter(
+        (index.setdefault(pair, len(index)) for pair in zip(s1, s2)), dtype=np.int64, count=len(s1)
+    )
+    score = np.zeros(len(index), np.int64)
+    left, right, owner = [], [], []
+    for k, (a, b) in enumerate(index):
+        t1, t2 = tokens[a], tokens[b]
+        if not t1 or not t2:
+            continue
+        if t1 <= t2 or t2 <= t1:
+            score[k] = 100
+        elif t1.isdisjoint(t2):
+            left.append(joined[a])
+            right.append(joined[b])
+            owner.append(k)
+        else:
+            sect = " ".join(sorted(t1 & t2))
+            c12 = sect + " " + " ".join(sorted(t1 - t2))
+            c21 = sect + " " + " ".join(sorted(t2 - t1))
+            left += (sect, sect, c12)
+            right += (c12, c21, c21)
+            owner += (k, k, k)
+    if owner:
+        np.maximum.at(score, np.array(owner), ratio_batch(left, right))
+    return score[keys]
 
 
 # --------------------------------------------------------------------------

@@ -8,8 +8,8 @@ split (``:36``), ``RandomForestClassifier(n_estimators=100, random_state=32)``
 Spark-first mapping (SURVEY.md §2.8 M1-M7):
 
 * M1/M2 — :func:`pair_features` computes the five features in ONE Arrow
-  pandas UDF pass (vs the reference's row-at-a-time ``df.apply``), then
-  ``VectorAssembler`` packs them.  NOTE: the training path scores RAW
+  pandas UDF pass (vs the reference's row-at-a-time ``df.apply``) with the
+  batch similarity kernels, then ``VectorAssembler`` packs them.  NOTE: the training path scores RAW
   strings — no lowercasing — unlike the serving scorer (``train_model.py:
   15-24`` vs ``main.py:26-30``); replicated faithfully.
 * M3 — ``randomSplit([0.7, 0.3], seed=32)``: same split semantics, not the
@@ -37,10 +37,10 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions.similarity import (
     metaphone,
-    partial_ratio,
-    ratio,
+    partial_ratio_batch,
+    ratio_batch,
     soundex,
-    token_set_ratio,
+    token_set_ratio_batch,
 )
 
 __all__ = [
@@ -67,18 +67,19 @@ _FEATURES_SCHEMA = StructType([StructField(c, IntegerType()) for c in FEATURE_CO
 @pandas_udf(_FEATURES_SCHEMA)
 def _pair_features_udf(username: pd.Series, employee_name: pd.Series) -> pd.DataFrame:
     """The five features of ``train_model.py:15-26`` on raw (uncased)
-    strings, one Arrow batch at a time."""
-    rows = [
-        (
-            ratio(u, e),
-            partial_ratio(u, e),
-            token_set_ratio(u, e),
-            int(soundex(u) == soundex(e)),
-            int(metaphone(u) == metaphone(e)),
-        )
-        for u, e in zip(username.fillna(""), employee_name.fillna(""))
-    ]
-    return pd.DataFrame(rows, columns=FEATURE_COLS)
+    strings, one Arrow batch at a time: the three ratios through the batch
+    kernels, the phonetic codes once per distinct string of the batch."""
+    u, e = username.fillna("").tolist(), employee_name.fillna("").tolist()
+    codes = {s: (soundex(s), metaphone(s)) for s in {*u, *e}}
+    return pd.DataFrame(
+        {
+            "levenshtein": ratio_batch(u, e),
+            "partial_ratio": partial_ratio_batch(u, e),
+            "token_set_ratio": token_set_ratio_batch(u, e),
+            "soundex_match": [int(codes[a][0] == codes[b][0]) for a, b in zip(u, e)],
+            "metaphone_match": [int(codes[a][1] == codes[b][1]) for a, b in zip(u, e)],
+        }
+    )
 
 
 def pair_features(
@@ -107,6 +108,13 @@ def build_pipeline(num_trees: int = 100, seed: int = 32) -> Pipeline:
     return Pipeline(stages=[assembler, rf])
 
 
+def _staged_features(pairs: DataFrame) -> DataFrame:
+    """The labelled pairs with their features and a double label,
+    materialised once."""
+    featured = pair_features(pairs).withColumn("label", F.col("label").cast("double"))
+    return featured.localCheckpoint()
+
+
 def train_match_classifier(
     pairs: DataFrame,
     *,
@@ -115,8 +123,14 @@ def train_match_classifier(
     test_fraction: float = 0.3,
 ) -> tuple[PipelineModel, DataFrame]:
     """M1-M6 end-to-end: features → 70/30 split (seed 32, ``train_model.py:
-    36``) → fit → transform(test).  Returns (model, scored test set)."""
-    featured = pair_features(pairs).withColumn("label", F.col("label").cast("double"))
+    36``) → fit → transform(test).  Returns (model, scored test set).
+
+    The features are staged once: left lazy, the feature UDF reruns for
+    every pass over the split (the split itself, the forest's metadata
+    aggregate and bagged input, the scoring of the test set), about five
+    passes in all.  The checkpoint keeps the partitions and their row
+    order, so the seeded split selects the same rows."""
+    featured = _staged_features(pairs)
     train, test = featured.randomSplit([1.0 - test_fraction, test_fraction], seed=seed)
     model = build_pipeline(num_trees=num_trees, seed=seed).fit(train)
     return model, model.transform(test)
@@ -142,7 +156,9 @@ def tune_match_classifier(
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    featured = pair_features(pairs).withColumn("label", F.col("label").cast("double"))
+    # Staged once, as in train_match_classifier: every fold and grid point
+    # re-reads the features.
+    featured = _staged_features(pairs)
     pipe = build_pipeline(seed=seed)
     rf = pipe.getStages()[-1]
     grid = (

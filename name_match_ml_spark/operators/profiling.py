@@ -21,10 +21,23 @@ implementation-specific and would not hash-match any oracle.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["profile_columns", "winsorize", "equi_width_histogram", "apply_expectations", "chi_square_independence", "dp_noisy_counts", "table_digest"]
+
+
+def _has_shuffle(plan) -> bool:
+    """Whether a prepared JVM physical plan holds a shuffle exchange (under
+    AQE, in the initial plan the adaptive node wraps)."""
+    name = plan.getClass().getSimpleName()
+    if name == "ShuffleExchangeExec":
+        return True
+    if name == "AdaptiveSparkPlanExec":
+        return _has_shuffle(plan.executedPlan())
+    children = plan.children()
+    return any(_has_shuffle(children.apply(i)) for i in range(children.size()))
 
 
 def profile_columns(
@@ -69,10 +82,19 @@ def profile_columns(
     # the initial physical plan the RDD conversion schedules nothing
     # (file splits are computed driver-side), and a shuffled input's
     # parallelism is governed by shuffle.partitions/AQE anyway.
+    # The probe reads the prepared plan: the exchanges an aggregate or a
+    # sort-merge join needs are inserted only by preparation, so the
+    # planner's output looks shuffle-free for every such input.  Only a
+    # shuffle exchange counts: a BroadcastExchange only collects its small
+    # build side, so a scan joined to a broadcast side is probed (and
+    # floored) like a bare scan.
     sc = df.sparkSession.sparkContext
     try:
-        shuffle_free = "Exchange" not in df._jdf.queryExecution().sparkPlan().toString()
-    except Exception:
+        shuffle_free = not _has_shuffle(df._jdf.queryExecution().executedPlan())
+    except Py4JError:
+        # Fallback: a plan the JVM cannot hand over gets no floor — the
+        # aggregate then runs at the input's own parallelism, which is
+        # correct, only possibly slower.
         shuffle_free = False
     if shuffle_free and df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)

@@ -196,6 +196,24 @@ def test_score_candidates_matches_python_scorer(spark, ref_dfs):
         assert r.score == pytest.approx(want, abs=1e-9), (r.username, r.emp_id)
 
 
+def test_score_candidates_full_cross_product(spark, ref_dfs):
+    """The batch kernels in the scoring UDF ≡ the scalar oracle on the
+    whole fixture cross product (every username × every roster row,
+    edge usernames included)."""
+    employees, usernames = ref_dfs
+    pairs = prepare_usernames(usernames).crossJoin(prepare_employees(employees))
+    rows = score_candidates(pairs).select(
+        "username", "emp_id", "employee_name", "first_name", "last_name", "score"
+    ).collect()
+    emps, unames = _ref_rows()
+    assert len(rows) == len(emps) * len(unames)
+    for r in rows:
+        want = compute_match_score(
+            r.username, r.employee_name, r.first_name, r.last_name, r.emp_id
+        )
+        assert r.score == pytest.approx(want, abs=1e-9), (r.username, r.emp_id)
+
+
 def _found(matches):
     """Drop the NOT-FOUND sentinels: the matches that clear the threshold."""
     return matches.filter(matches.match_type != "USER NOT FOUND")

@@ -7,7 +7,7 @@ from pathlib import Path
 
 import pytest
 from pyspark.ml import PipelineModel
-from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+from pyspark.ml.evaluation import BinaryClassificationEvaluator, MulticlassClassificationEvaluator
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
@@ -20,6 +20,7 @@ from name_match_ml_spark.functions.similarity import (
 )
 from name_match_ml_spark.ml.pipeline import (
     FEATURE_COLS,
+    build_pipeline,
     evaluation_report,
     labeled_pairs_from_corpus,
     pair_features,
@@ -93,6 +94,31 @@ def test_model_save_load_roundtrip(spark, small_pairs, tmp_path):
     a = model.transform(featured).select("id", "prediction").collect()
     b = loaded.transform(featured).select("id", "prediction").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def test_staged_split_matches_lazy_split(spark, small_pairs):
+    """train_match_classifier stages the features before the seeded split;
+    the split must select the same test rows, and the model score them the
+    same, as the lazy plan it replaces."""
+    pairs = spark.createDataFrame(small_pairs.collect(), PAIRS_SCHEMA)
+    assert pairs.rdd.getNumPartitions() > 1
+    _, staged = train_match_classifier(pairs, num_trees=10)
+
+    featured = pair_features(pairs).withColumn("label", F.col("label").cast("double"))
+    train, test = featured.randomSplit([0.7, 0.3], seed=32)
+    lazy = build_pipeline(num_trees=10, seed=32).fit(train).transform(test)
+
+    def scored(pred):
+        return sorted(
+            (r.id, r.prediction, tuple(r.probability)) for r in pred.select("id", "prediction", "probability").collect()
+        )
+
+    assert scored(staged) == scored(lazy)
+    for ev in (
+        MulticlassClassificationEvaluator(labelCol="label", metricName="accuracy"),
+        BinaryClassificationEvaluator(labelCol="label", metricName="areaUnderROC"),
+    ):
+        assert ev.evaluate(staged) == ev.evaluate(lazy)
 
 
 def test_corpus_labeled_pairs(spark):

@@ -5,6 +5,7 @@ one-scan plan gate."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from name_match_ml_spark.operators.profiling import profile_columns
 from name_match_ml_spark.sources.parquet import table
@@ -91,3 +92,26 @@ def test_winsorize_rejects_bad_percentiles(spark):
     df = spark.createDataFrame([(1, 1.0)], ["id", "v"])
     with pytest.raises(ValueError):
         winsorize(df, "v", lower_pct=60, upper_pct=40)
+
+
+def test_profile_floor_applies_to_broadcast_join_input(spark, tmp_path):
+    """A scan joined to a broadcast side has no shuffle, so the
+    under-parallel scan still gets the parallelism floor; an aggregated
+    input (a shuffle inserted only when the plan is prepared) is not
+    probed and keeps its own partitioning."""
+    path = str(tmp_path / "facts")
+    spark.createDataFrame([(i, i % 7) for i in range(300)], ["v", "k"]).coalesce(1).write.parquet(path)
+    dims = spark.createDataFrame([(k, f"d{k}") for k in range(7)], ["k", "name"])
+    joined = spark.read.parquet(path).join(F.broadcast(dims), "k")
+    assert "BroadcastExchange" in joined._jdf.queryExecution().executedPlan().toString()
+    assert joined.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+
+    out = profile_columns(joined, ["v", "name"], distinct="exact")
+    assert "RoundRobinPartitioning" in out._jdf.queryExecution().executedPlan().toString()
+    got = {r.col_name: (r.n_rows, r.n_null, r.n_distinct) for r in out.collect()}
+    assert got == {"v": (300, 0, 300), "name": (300, 0, 7)}
+
+    grouped = spark.read.parquet(path).groupBy("k").count()
+    out = profile_columns(grouped, ["k"], distinct="exact")
+    assert "RoundRobinPartitioning" not in out._jdf.queryExecution().executedPlan().toString()
+    assert [(r.n_rows, r.n_distinct) for r in out.collect()] == [(7, 7)]

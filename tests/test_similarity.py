@@ -10,18 +10,24 @@ from __future__ import annotations
 import csv
 from pathlib import Path
 
+import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from name_match_ml_spark.functions.scoring import compute_match_score
 from name_match_ml_spark.functions.similarity import (
+    MAX_LANE_NEEDLE,
+    _partial_ratio_float,
     full_process,
     metaphone,
     partial_ratio,
+    partial_ratio_batch,
     ratio,
+    ratio_batch,
     soundex,
     token_set_ratio,
+    token_set_ratio_batch,
 )
 
 REF_EMPLOYEES = Path(__file__).parent / "fixtures" / "employee.csv"
@@ -218,3 +224,97 @@ def test_exact_pattern_short_circuits_to_100():
         "swatipatel", "patelswati", "swati patel", "patel swati",
     ]:
         assert compute_match_score(u, "Swati Patel", "Swati", "Patel", "7") == 100.0
+
+
+# -- batch kernels: bit-identical to their scalar twins --------------------
+
+KERNELS = [
+    (ratio, ratio_batch),
+    (partial_ratio, partial_ratio_batch),
+    (token_set_ratio, token_set_ratio_batch),
+]
+KERNEL_IDS = ["ratio", "partial_ratio", "token_set_ratio"]
+
+
+def _assert_batch_matches(scalar, batch, pairs):
+    got = batch([a for a, _ in pairs], [b for _, b in pairs])
+    assert isinstance(got, np.ndarray) and len(got) == len(pairs)
+    want = [scalar(a, b) for a, b in pairs]
+    assert [int(x) for x in got] == want
+
+
+_NAME_TEXT = st.text(alphabet="abcdefghijklmnopqrstuvwxyz0123456789 ._-é", max_size=24)
+
+
+@pytest.mark.parametrize("scalar,batch", KERNELS, ids=KERNEL_IDS)
+@given(st.lists(st.tuples(_NAME_TEXT, _NAME_TEXT), max_size=40))
+@settings(max_examples=150, deadline=None)
+def test_batch_kernel_matches_scalar(scalar, batch, pairs):
+    _assert_batch_matches(scalar, batch, pairs + [("", ""), ("", "a"), ("john.", "")])
+
+
+@pytest.mark.parametrize("scalar,batch", KERNELS, ids=KERNEL_IDS)
+def test_batch_kernel_fallback_boundary(scalar, batch):
+    """Needles of 63 characters run in a lane; 64 and 65 fall back to the
+    scalar kernel.  Mixed in one batch, both paths must agree with it."""
+    assert MAX_LANE_NEEDLE == 63
+    pairs = []
+    for n in (62, 63, 64, 65):
+        needle = ("ab.cd efg_" * 7)[:n]
+        pairs += [
+            (needle, needle),
+            (needle, "x" + needle + "yz"),
+            (needle[::-1], needle + " tail"),
+            (needle, needle[: n // 2]),
+            ("harsh sharma", needle),
+        ]
+    _assert_batch_matches(scalar, batch, pairs)
+
+
+def test_partial_ratio_batch_equal_length_both_directions():
+    """Equal lengths: the scalar kernel also sweeps the second string as
+    the needle; the batch gives such pairs lanes in both directions."""
+    pairs = [
+        ("swati.patel", "tanvi patel"),
+        ("tanvi patel", "swati.patel"),
+        ("abcx", "yabc"),
+        ("xbca", "abcy"),
+        ("ab", "ba"),
+        ("aaab", "baaa"),
+    ]
+    # The second direction decides at least one of these.
+    assert any(partial_ratio(a, b) != int(round(100 * _partial_ratio_float(a, b))) for a, b in pairs)
+    _assert_batch_matches(partial_ratio, partial_ratio_batch, pairs)
+
+
+@pytest.mark.parametrize("scalar,batch", KERNELS, ids=KERNEL_IDS)
+def test_batch_kernel_golden_pairs(scalar, batch):
+    """The example.png (FIXTURES.md §E) score components through the batch
+    kernels: each golden username against its employee's full, first and
+    last name."""
+    emps = _employees()
+    pairs = []
+    for username, emp_id, _ in GOLDEN:
+        first, last = emps[emp_id]
+        u = username.lower()
+        pairs += [(u, f"{first} {last}".lower()), (u, first.lower()), (u, last.lower())]
+    _assert_batch_matches(scalar, batch, pairs)
+
+
+@pytest.mark.parametrize(
+    "batch,s1,s2,expected",
+    [
+        (ratio_batch, "swati.patel", "tanvi patel", 64),
+        (partial_ratio_batch, "swati.patel", "tanvi patel", 74),
+        (partial_ratio_batch, "n.tripathi25", "neha tripathi", 80),
+        (token_set_ratio_batch, "swati.patel", "tanvi patel", 73),
+        (token_set_ratio_batch, "harshm37", "sharma", 57),
+    ],
+)
+def test_batch_kernel_golden_values(batch, s1, s2, expected):
+    assert list(batch([s1], [s2])) == [expected]
+
+
+@pytest.mark.parametrize("batch", [b for _, b in KERNELS], ids=KERNEL_IDS)
+def test_batch_kernel_empty_batch(batch):
+    assert len(batch([], [])) == 0
